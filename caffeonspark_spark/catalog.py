@@ -42,11 +42,37 @@ def table_nrows(sf_dir: str, name: str) -> int:
     and bench timings would include it (r12 ADVICE). Footer reads are
     O(files) metadata IO; at cluster scale the same number comes from the
     table catalog / manifest instead."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
+    files = _visible_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def path_bytes(path: str, name_glob: str | None = None) -> int:
+    """On-disk bytes of the files a file source reads at ``path`` — a
+    driver-side listing, no Spark job (``table_nrows``' rule for lazy
+    builders). ``name_glob`` mirrors the source's ``pathGlobFilter``: it
+    is matched against file names only. Raises FileNotFoundError when
+    ``path`` does not exist."""
+    import fnmatch
+
+    if not os.path.exists(path):
+        raise FileNotFoundError(path)
+    return sum(
+        os.path.getsize(f)
+        for f in _visible_files(path)
+        if name_glob is None or fnmatch.fnmatch(os.path.basename(f), name_glob)
+    )
+
+
+def _visible_files(path: str) -> list[str]:
+    """``path`` itself when it is a file, else every file under it that a
+    Spark scan reads, sorted."""
+    import glob as _glob
+
     # recursive: a Hive-partitioned layout (key=value subdirectories from
     # a partitionBy write) nests its part files — Spark reads it fine, so
     # the metadata count must too (r13 review finding). Spark's FileIndex
@@ -66,19 +92,14 @@ def table_nrows(sf_dir: str, name: str) -> int:
     # the scan it claims to mirror (r13 ADVICE). For Spark-written
     # layouts the two sets coincide — the visibility filter already
     # drops _SUCCESS/_temporary/dotfiles. A visible non-parquet stray
-    # raises at the footer read below; the same file breaks the scan.
-    files = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(f) and _visible(f)
-        )
+    # raises at table_nrows' footer read; the same file breaks the scan.
+    if os.path.isfile(path):
+        return [path]
+    return sorted(
+        f
+        for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
+        if os.path.isfile(f) and _visible(f)
     )
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -117,10 +138,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> None:

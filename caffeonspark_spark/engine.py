@@ -25,6 +25,23 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
+#: per-partition byte target for every width the engine derives from a
+#: measured size (memo-pin read views, streaming state partitions) — the
+#: role AQE's ``advisoryPartitionSizeInBytes`` plays for shuffle output,
+#: and its 64 MB default, so a derived width narrows exactly where AQE
+#: would have coalesced a shuffle of the same bytes. Overridable for
+#: production with SPARK_GRAFT_PIN_PARTITION_BYTES — named for the pins,
+#: but it sets the bounded-replay stream state width too.
+PARTITION_BYTES = int(
+    os.environ.get("SPARK_GRAFT_PIN_PARTITION_BYTES", str(64 << 20))
+)
+
+
+def partitions_for_bytes(nbytes: int, cap: int) -> int:
+    """Partition count for ``nbytes`` at the shared byte target: one per
+    started ``PARTITION_BYTES``, at least 1, never more than ``cap``."""
+    return max(1, min(cap, nbytes // PARTITION_BYTES + 1))
+
 
 @dataclass
 class Config:

@@ -69,10 +69,6 @@ def dsum_sql(expr: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(30,{scale}))) AS DOUBLE)"
 
 
-def davg_sql(expr: str, scale: int = 2) -> str:
-    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
-
-
 def fsum(col: Column | str, scale: int = FLOAT_SCALE) -> Column:
     """Decimal-exact sum for float32-derived values: HALF_EVEN round at
     ``scale`` first (matches DuckDB's cast), then exact decimal accumulation.
@@ -118,14 +114,6 @@ def vector_mean_long(df: DataFrame, array_col: str, group_cols: list[str] | None
     )
 
 
-def vector_mean_array(df: DataFrame, array_col: str) -> list[float]:
-    """Driver-side convenience: element-wise mean as a Python list (matches
-    the UDAF's ``evaluate`` output shape used in ``CaffeOnSpark.scala:402-411``
-    for small test summaries; NOT for large data)."""
-    rows = vector_mean_long(df, array_col).orderBy("pos").collect()
-    return [r["mean_val"] for r in rows]
-
-
 def dot_product(a: Column, b: Column) -> Column:
     """Deterministic dot product of two float-array columns.
 
@@ -158,11 +146,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     them; NULL similarities fall out of top-k orderings naturally."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom != 0, dot_product(a, b) / denom)
-
-
-def dot_product_sql(a_elem: str, b_elem: str) -> str:
-    """DuckDB aggregate rendering of ``dot_product`` over unnested elements."""
-    return (
-        f"CAST(SUM(CAST(CAST({a_elem} AS DOUBLE) * CAST({b_elem} AS DOUBLE) "
-        f"AS DECIMAL(30,{FLOAT_SCALE}))) AS DOUBLE)"
-    )

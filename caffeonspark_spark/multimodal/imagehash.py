@@ -310,7 +310,7 @@ def _chunk_fold(chunk_col: Column) -> Column:
     return char_fold_vec(chunk_col)
 
 
-def portable_image_bands(rs: list[Column]) -> list[Column]:
+def portable_image_bands(rs: list[str]) -> list[Column]:
     """The portable pixel matrix + dHash over MATERIALIZED row seeds:
     pixel(i, j) = (r_i · (j+1) + i) mod 256; dHash bit at (i, j) iff
     pixel(i, j) < pixel(i, j+1); band k packs rows 2k, 2k+1.
@@ -334,7 +334,9 @@ def portable_image_bands(rs: list[Column]) -> list[Column]:
     the video_dedup_map construction was this function's socket chatter).
     Arithmetic is unchanged term for term: pmod(r·(j+1)+i, 256)
     comparisons, bit·2^t terms summed as longs — long addition is exact,
-    so the value is bit-identical (oracles re-checked)."""
+    so the value is bit-identical (oracles re-checked). The names are
+    spliced into SQL text, so each must be a plain identifier."""
+    assert all(isinstance(r, str) and r.isidentifier() for r in rs), rs
 
     def pix(r: str, i: int, j: int) -> str:
         return f"pmod({r} * {j + 1} + {i}, 256)"
@@ -481,20 +483,6 @@ def family_combinatorics_sql(family: int) -> str:
       ON (a.doc_id - (a.doc_id % {family})) = (b.doc_id - (b.doc_id % {family}))
      AND a.doc_id < b.doc_id
 """
-
-
-def _planted_pgm_rows(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(doc_id) batches → (id, image): the planted-family PGM corpus."""
-    for pdf in pdfs:
-        ids, imgs = [], []
-        for rid in pdf["doc_id"]:
-            rid = int(rid)
-            scaled = planted_family_matrix(rid, (_N_ROWS, _N_COLS))
-            big = np.repeat(np.repeat(scaled, 4, axis=0), 4, axis=1)
-            pgm = b"P5\n%d %d\n255\n" % (big.shape[1], big.shape[0]) + big.tobytes()
-            ids.append(rid)
-            imgs.append(pgm)
-        yield pd.DataFrame({"id": ids, "image": imgs})
 
 
 def _planted_image_hash_rows(

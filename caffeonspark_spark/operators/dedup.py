@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from caffeonspark_spark.catalog import load_table
-from caffeonspark_spark.engine import scale_out
+from caffeonspark_spark.engine import partitions_for_bytes, scale_out
 from caffeonspark_spark.functions.text import (
     char_fold_vec,
     doc_fingerprint,  # noqa: F401 — production (xxhash64) fingerprint API
@@ -140,15 +140,6 @@ def _cache_key(key: str, df: DataFrame) -> tuple | None:
     return (_session_token(df.sparkSession), key, plan_hash)
 
 
-#: per-partition byte target for the post-fill pin-width probe below —
-#: the same role AQE's ``advisoryPartitionSizeInBytes`` plays for shuffle
-#: output. Overridable for production (SPARK_GRAFT_PIN_PARTITION_BYTES);
-#: the 64 MB default matches AQE's advisory default, so a pin narrows
-#: exactly where AQE would have coalesced a shuffle of the same bytes.
-_PIN_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PIN_PARTITION_BYTES", str(64 << 20))
-)
-
 #: coalesced read views over pinned entries (r17): same keys as _CACHED,
 #: cleared together. The VALUE in _CACHED stays the persisted DataFrame —
 #: unpersist() must be called on the exact cached plan to release blocks.
@@ -163,12 +154,16 @@ def _narrow_view(df: DataFrame) -> DataFrame | None:
     (the front-end compute wants the parallelism) but wrong for READING a
     metadata-sized result: every downstream stage schedules one near-empty
     task per build partition (profiled on video_dedup_map: 32-task stages
-    with 0.2-0.8 s of TOTAL task work each). AQE cannot re-coalesce a
-    cached relation (``canChangeCachedPlanOutputPartitioning`` default), so
-    derive the READ width from the pin's own MATERIALIZED byte size — the
-    measurement the eager fill already paid for — at the same bytes-per-
-    partition target AQE uses for shuffles. Corpus-sized pins keep full
-    width (bytes/64 MB ≥ build width); only metadata-sized pins narrow.
+    with 0.2-0.8 s of TOTAL task work each). The engine sets
+    ``canChangeCachedPlanOutputPartitioning=true``, but that only lets AQE
+    re-optimize the plan that BUILDS the pin: a build ending in a scan or
+    a fixed-count repartition (``scale_out``) is never coalesced, and
+    every stage that reads the cached relation runs one task per cached
+    partition. So derive the READ width from the pin's own MATERIALIZED
+    byte size — the measurement the eager fill already paid for — with
+    ``engine.partitions_for_bytes`` (the shared 64 MB target AQE uses for
+    shuffles). Corpus-sized pins keep full width (bytes/64 MB ≥ build
+    width); only metadata-sized pins narrow.
     Returns a coalesce VIEW over the cached blocks (no second
     materialization, no shuffle — the single read task fetches local cache
     blocks), or None when the pin should keep its build width."""
@@ -182,7 +177,7 @@ def _narrow_view(df: DataFrame) -> DataFrame | None:
         cur = plan.execute().getNumPartitions()
     except Exception:  # pragma: no cover - non-classic backend
         return None
-    want = max(1, min(cur, size // _PIN_PARTITION_BYTES + 1))
+    want = partitions_for_bytes(size, cur)
     if want >= cur:
         return None
     return df.coalesce(want)

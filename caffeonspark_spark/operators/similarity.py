@@ -949,18 +949,23 @@ def nearest_centroid_col(
     construction). Values are bit-identical: every float is embedded as
     ``cast('<repr>' as double)`` — ``repr`` round-trips the IEEE double
     and the string→double cast is correctly rounded, so the parsed
-    literal IS the original value. Non-finite centroids (never produced
-    by the mean updates, but guard anyway) fall back to the Column form."""
+    literal IS the original value. Non-finite or null centroid elements
+    (never produced by the mean updates, but guard anyway) fall back to
+    the Column form."""
     import math
 
-    if all(math.isfinite(x) for _, vec in cent_rows for x in vec):
+    if all(
+        isinstance(x, (int, float)) and math.isfinite(x)
+        for _, vec in cent_rows
+        for x in vec
+    ):
         structs = ",".join(
             "named_struct('cid', CAST(%d AS BIGINT), 'c', array(%s))"
             % (cid, ",".join(f"cast('{x!r}' as double)" for x in vec))
             for cid, vec in cent_rows
         )
         cent_arr = F.expr(f"array({structs})")
-    else:  # pragma: no cover - non-finite centroid guard
+    else:  # non-finite or null centroid element
         cent_arr = F.array(
             *[
                 F.struct(

@@ -107,13 +107,6 @@ def zscore_by_group(
     )
 
 
-def zscore_events_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas grouped-map z-score over events (unit-test twin of the exact
-    declared form below; kept as the custom-Python-operator exemplar)."""
-    ev = load_table(spark, sf_dir, "events")
-    return zscore_by_group(ev, "event_type", "value", "event_id")
-
-
 def zscore_events_exact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared query: per-event-type z-score from ORDER-INDEPENDENT moment
     sums — n, Σx, Σx² accumulated decimal-exact on the 2-decimal value grid,

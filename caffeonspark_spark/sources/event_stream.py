@@ -27,7 +27,6 @@ read) is exactly what a Kafka-like or object-store-manifest source needs.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -139,10 +138,3 @@ def read_event_stream(
         .option("n_partitions", str(n_partitions))
         .load()
     )
-
-
-def offsets_equal(a: str | dict, b: str | dict) -> bool:
-    """Helper for tests/ops: offsets are json dicts."""
-    da = json.loads(a) if isinstance(a, str) else a
-    db = json.loads(b) if isinstance(b, str) else b
-    return da == db

@@ -89,16 +89,6 @@ def exists(path: str) -> bool:
     return fs.get_file_info(internal).type != pafs.FileType.NotFound
 
 
-def file_size(path: str) -> int:
-    if not is_uri(path):
-        return os.path.getsize(path)
-    fs, internal = _resolve(path)
-    info = fs.get_file_info(internal)
-    if info.size is None:
-        raise FileNotFoundError(path)
-    return info.size
-
-
 def list_files(path: str) -> list[tuple[str, int]]:
     """Non-hidden direct-child data files of ``path`` as sorted
     ``(path-in-the-same-form, size)`` — one metadata round-trip for the

@@ -12,13 +12,41 @@ Scale posture: every query here is incremental — state is bounded by the
 watermark horizon; at 100 TB/day the same plans run against Kafka sources
 with checkpointing to object storage (swap ``read_events_stream`` for
 ``spark.readStream.format("kafka")`` + the identical transformations).
+
+State-partition sizing: the bounded replays here — ``run_to_memory``
+(every parity stream) and the late-data query, whose whole source exists
+when the query starts — go through ``start_sized``, which picks the
+stream's state-partition count from the bytes of its file sources at
+start: ``max(1, min(spark.sql.shuffle.partitions, source_bytes // 64 MB
++ 1))``, the same ``engine.partitions_for_bytes`` target the memo pins
+read at (so ``SPARK_GRAFT_PIN_PARTITION_BYTES`` moves both). State-store
+cost is fixed per partition, not per row: a 10k-event stream at the
+32-partition session default ran 34 tasks and ~4 s of summed state
+commits per pass, against 3 tasks and ~0.05 s at one partition, with
+identical output. Spark records the count in a checkpoint's offset log,
+so a restarted query keeps its first-start width whatever its source has
+grown to — which is why the sizing stays off long-running checkpointed
+sinks (``sinks.foreach_batch_parquet`` starts at the session width): a
+growing stream's first bytes, like an empty source's, say nothing about
+its volume, and a checkpointed file stream started through
+``start_sized`` would keep its first-start width until it gets a new
+checkpoint. A source with no known size (Kafka, rate, a non-local path,
+a still-empty directory) keeps the session width. The conf is narrowed
+only around ``DataStreamWriter.start()`` (the query clones the session
+there and keeps the value); a batch query planned concurrently on the
+same session during that window sees the narrower initial shuffle width
+— harmless, since no result here depends on partition count and AQE
+re-coalesces shuffles anyway.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -37,32 +65,29 @@ def _raw_events_stream(spark: SparkSession, sf_dir: str):
     on-disk ts type from the parquet footer (driver metadata only — a
     forced LongType over a µs-NTZ column silently yields micros-as-long,
     the round-4 frozen-watermark bug), rebuild the schema around it, and
-    open the glob-filtered readStream. Returns (raw, disk_ts); callers
-    apply their TIMESTAMP vs TIMESTAMP_NTZ conversion on top. ONE copy on
-    purpose: a fix to the probe/glob/source setup must reach both
+    open the readStream over the events table. Returns (raw, disk_ts);
+    callers apply their TIMESTAMP vs TIMESTAMP_NTZ conversion on top. ONE
+    copy on purpose: a fix to the probe/glob/source setup must reach both
     variants (r7 self-review finding)."""
     import os
 
+    from caffeonspark_spark.catalog import table_path
+
+    path = table_path(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    disk_ts = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .schema["ts"]
-        .dataType
-    )
+    disk_ts = spark.read.parquet(path).schema["ts"].dataType
     schema = T.StructType(
         [
             T.StructField(f.name, disk_ts if f.name == "ts" else f.dataType)
             for f in EVENTS_SCHEMA.fields
         ]
     )
-    # the streaming file source wants a directory; select just the events
-    # table out of the sf_dir with a glob filter
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    reader = spark.readStream.schema(schema).format("parquet")
+    if os.path.isdir(path):  # directory layout: the table IS a directory
+        return reader.load(path), disk_ts
+    # single-file layout: the streaming file source wants a directory, so
+    # select just the events file out of the sf_dir with a glob filter
+    raw = reader.option("pathGlobFilter", os.path.basename(path)).load(sf_dir)
     return raw, disk_ts
 
 
@@ -336,14 +361,82 @@ ORACLE_STREAM_JOIN_PARITY = """
 """
 
 
+#: serializes the shuffle-partitions override in ``start_sized``: two
+#: concurrent starts must neither see each other's width nor restore it
+_START_LOCK = threading.Lock()
+
+
+def stream_source_bytes(stream_df: DataFrame) -> int | None:
+    """Bytes on disk under every file source of a streaming plan, from a
+    driver-side listing (no Spark job). None — "size unknown" — when any
+    streaming source is not a local file source (Kafka, rate, a Python
+    data source, an object-store or glob path), when the sources are
+    still empty (their first bytes say nothing about the stream's
+    volume), or when the plan cannot be inspected. Batch leaves (the
+    static side of a stream-static join) carry no state and are skipped."""
+    from urllib.parse import urlparse
+
+    from caffeonspark_spark.catalog import path_bytes
+
+    try:
+        leaves = stream_df._jdf.queryExecution().logical().collectLeaves()
+        total, it = 0, leaves.iterator()
+        while it.hasNext():
+            leaf = it.next()
+            if not leaf.isStreaming():
+                continue
+            if leaf.getClass().getSimpleName() != "StreamingRelation":
+                return None
+            opts = leaf.dataSource().options()
+            path, glob = opts.get("path"), opts.get("pathGlobFilter")
+            if not path.isDefined():
+                return None
+            url = urlparse(path.get())
+            if url.scheme not in ("", "file"):
+                return None
+            total += path_bytes(url.path, glob.get() if glob.isDefined() else None)
+    except Exception:  # non-classic backend, missing path, plan quirk
+        return None
+    return total or None
+
+
+def start_sized(
+    writer: DataStreamWriter, stream_df: DataFrame
+) -> StreamingQuery:
+    """``writer.start()`` for a bounded replay of ``stream_df`` (the
+    DataFrame ``writer`` was made from), with the state-partition count
+    sized to its source bytes (see the module docstring): the session's
+    ``spark.sql.shuffle.partitions`` is narrowed to
+    ``partitions_for_bytes(stream_source_bytes(stream_df), current)`` only
+    for the ``start()`` call — the query's cloned session keeps it, and a
+    first start writes it to the checkpoint's offset log — then restored.
+    A source of unknown size starts at the session width. Not for
+    long-running checkpointed sinks over a growing source: they would
+    keep the first start's width for the checkpoint's life."""
+    from caffeonspark_spark.engine import partitions_for_bytes
+
+    source_bytes = stream_source_bytes(stream_df)
+    if source_bytes is None:
+        return writer.start()
+    spark = stream_df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(partitions_for_bytes(source_bytes, int(prev))))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, prev)
+
+
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     """Drive a streaming query to completion against the file source and
     return the in-memory result table name (test/smoke harness)."""
-    q = (
+    q = start_sized(
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
+        stream_df,
     )
     try:
         q.processAllAvailable()
@@ -657,11 +750,10 @@ def stream_late_data_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.catalog.dropTempView(prev)
         except Exception:  # other session / already gone
             pass
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+    # sized from wave 0, the only data present at first start
+    q = start_sized(
+        agg.writeStream.outputMode("append").format("memory").queryName(name),
+        agg,
     )
     try:
         q.processAllAvailable()  # wave 0 commits; watermark = max - 1h

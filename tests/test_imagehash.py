@@ -94,6 +94,15 @@ def test_dhash_band_layout():
     assert bands2[2] == 0x00FF  # row 5 = odd row of band 2: high byte cleared
 
 
+def test_portable_image_bands_rejects_non_identifier_names():
+    """Band SQL is spliced from the seed names: anything but a plain
+    column identifier is refused before it reaches the parser."""
+    from caffeonspark_spark.multimodal.imagehash import portable_image_bands
+
+    with pytest.raises(AssertionError):
+        portable_image_bands([f"r{i}" for i in range(7)] + ["r7); drop"])
+
+
 def test_phash_brightness_invariance():
     """A constant brightness offset shifts only the DC coefficient, which
     is excluded from the median — the pHash must not change."""

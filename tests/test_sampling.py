@@ -138,6 +138,20 @@ def test_kmeans_assign_matches_numpy(spark, sf_oracle):
         assert math.isclose(out[vid][1], d[best], rel_tol=1e-9)
 
 
+def test_nearest_centroid_col_null_element_falls_back(spark):
+    """A ``None`` centroid element must take the Column-literal fallback
+    (``math.isfinite(None)`` used to raise a TypeError while building the
+    expression); the null then propagates as a SQL NULL distance."""
+    from caffeonspark_spark.operators.similarity import nearest_centroid_col
+
+    df = spark.createDataFrame([(1, [1.0, 1.0])], "id long, v array<float>")
+    col = nearest_centroid_col([(0, [None, 5.0]), (1, [3.0, 1.0])], "v")
+    (s,) = df.select(col.alias("s")).first()
+    assert s["centroid_id"] == 0 and s["dist2"] is None
+    finite = nearest_centroid_col([(0, [1.0, 1.0]), (1, [3.0, 1.0])], "v")
+    assert df.select(finite.alias("s")).first()["s"] == (0.0, 0)
+
+
 def test_kmeans_assign_plan_is_map_only(spark, sf_oracle):
     """Centroids are plan literals: the assignment must be a single
     map-only projection — no join, no aggregate, no exchange anywhere."""

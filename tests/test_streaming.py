@@ -432,3 +432,156 @@ def test_stream_dedup_parity_matches_oracle(spark):
         stream_dedup_parity(spark, sf), ORACLE_STREAM_DEDUP_PARITY, sf
     )
     assert ok2, msg2
+
+
+def _state_partitions(progress) -> set[int]:
+    return {op["numShufflePartitions"] for op in progress["stateOperators"]}
+
+
+def test_parity_streams_size_state_partitions_from_source(spark, sf_smoke):
+    """The smoke events table is a few KB, so every parity stream starts
+    with ONE state partition on every state operator (not the session's
+    shuffle width), and the session conf is back to its value after."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from caffeonspark_spark.streaming.windows import (
+        stream_join_parity,
+        stream_tumbling_parity,
+    )
+
+    class Collect(StreamingQueryListener):
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.progress: list = []
+            self.done: set[str] = set()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            with self.lock:
+                self.progress.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.lock:
+                self.done.add(str(event.runId))
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = Collect()
+    spark.streams.addListener(listener)
+    try:
+        assert stream_tumbling_parity(spark, sf_smoke).count() > 0
+        assert stream_join_parity(spark, sf_smoke).count() > 0
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline:
+            with listener.lock:
+                if len(listener.done) >= 2:
+                    break
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(listener)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    stateful = [p for p in listener.progress if p.stateOperators]
+    assert {p.name.rsplit("_", 1)[0] for p in stateful} == {
+        "stream_tumbling_parity",
+        "stream_join_parity",
+    }
+    for p in stateful:
+        assert all(op.numShufflePartitions == 1 for op in p.stateOperators), p
+
+
+def test_partitions_for_bytes_rule(monkeypatch):
+    """One partition per started PARTITION_BYTES, at least 1, capped at
+    the session width; at the default 64 MB target a multi-GB source gets
+    the full cap."""
+    from caffeonspark_spark import engine
+    from caffeonspark_spark.engine import partitions_for_bytes
+
+    target = engine.PARTITION_BYTES
+    assert partitions_for_bytes(0, 32) == 1
+    assert partitions_for_bytes(target - 1, 32) == 1
+    assert partitions_for_bytes(target, 32) == 2
+    assert partitions_for_bytes(3 * target, 32) == 4
+    assert partitions_for_bytes(100 * target, 32) == 32
+    assert partitions_for_bytes(100 * target, 8) == 8
+    monkeypatch.setattr(engine, "PARTITION_BYTES", 64 << 20)
+    assert partitions_for_bytes(5 << 30, 32) == 32
+
+
+def test_restart_keeps_first_start_state_partitions(spark, tmp_path, monkeypatch):
+    """The state-partition count is fixed at a checkpoint's first start:
+    a restart whose source now reads as multi-GB keeps the first start's
+    single partition (Spark restores it from the offset log), and the
+    restarted aggregate is still exact. A fresh query seeing the same
+    size does get the full session width, so the restart really did
+    override the rule."""
+    from caffeonspark_spark import engine
+    from caffeonspark_spark.streaming import windows
+    from caffeonspark_spark.streaming.windows import EVENTS_SCHEMA, start_sized
+
+    src, chk = str(tmp_path / "src"), str(tmp_path / "chk")
+    base = 1_700_000_000 * 1_000_000_000
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width > 1
+
+    def write(start_id, n, mode):
+        rows = [
+            (start_id + i, base + i * 10**9, i % 3, "click", 1.0, "{}")
+            for i in range(n)
+        ]
+        spark.createDataFrame(rows, EVENTS_SCHEMA).write.mode(mode).parquet(src)
+
+    def run(name, checkpoint=True):
+        agg = (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .parquet(src)
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        writer = agg.writeStream.outputMode("complete").format("memory")
+        if checkpoint:
+            writer = writer.option("checkpointLocation", chk)
+        q = start_sized(writer.queryName(name), agg)
+        try:
+            q.processAllAvailable()
+            return _state_partitions(q.lastProgress)
+        finally:
+            q.stop()
+
+    write(0, 9, "overwrite")
+    assert run("restart_first") == {1}
+    write(100, 6, "append")
+    # the source "grows" past the full session width's worth of bytes
+    grown = width * engine.PARTITION_BYTES
+    monkeypatch.setattr(windows, "stream_source_bytes", lambda df: grown)
+    assert run("restart_again") == {1}
+    got = {r["user_id"]: r["n"] for r in spark.table("restart_again").collect()}
+    assert got == {0: 5, 1: 5, 2: 5}
+    assert run("restart_fresh", checkpoint=False) == {width}
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == width
+
+
+def test_stream_reads_directory_layout_events(spark, sf_smoke, tmp_path):
+    """An events table written as a DIRECTORY of part files streams every
+    row: the stream must equal the single-file layout's, not come back
+    empty from a file-name glob that matches nothing."""
+    import pyarrow.parquet as pq
+
+    from caffeonspark_spark.streaming.windows import stream_tumbling_parity
+
+    table = pq.read_table(f"{sf_smoke}/events.parquet")
+    events_dir = tmp_path / "events.parquet"
+    events_dir.mkdir()
+    half = table.num_rows // 2
+    pq.write_table(table.slice(0, half), str(events_dir / "part-00000.parquet"))
+    pq.write_table(table.slice(half), str(events_dir / "part-00001.parquet"))
+
+    want = sorted(map(tuple, stream_tumbling_parity(spark, sf_smoke).collect()))
+    got = sorted(map(tuple, stream_tumbling_parity(spark, str(tmp_path)).collect()))
+    assert want and got == want
