@@ -921,6 +921,11 @@ def minhash_lsh_pairs_df(
     # pass the concurrent branch race never cost on an idle scheduler
     # (driver measured minhash_lsh 2.1 -> 2.8 s); the lazy pin still
     # guarantees at most one cached copy and r15's timing envelope.
+    # Risk: the pin is not single-consumer — it feeds BOTH sides of the
+    # self-join, and both sides' stages can start before either has
+    # filled it. On an idle local scheduler one side fills first; on a
+    # busy cluster AQE can run the two sides concurrently and compute the
+    # signature subtree once per side. Fill eagerly if that shows up.
     sigs = _persist_replacing(
         "minhash_sigs", minhash_signatures(docs), eager=False
     )

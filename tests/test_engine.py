@@ -53,3 +53,68 @@ def test_requires_catalog():
     e.sf_dir = None
     with pytest.raises(RuntimeError, match="attach_catalog"):
         e.table("lineitem")
+
+
+def _compiled(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_more_than_spark_default(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    # 150 distinct generated classes: more than Spark's default cap of 100,
+    # so at the default the first class is evicted before it is reused.
+    def query(k):
+        return spark.range(8).selectExpr(f"id * {k} + {k} AS v").collect()
+
+    first = query(7001)
+    for k in range(7002, 7152):
+        query(k)
+    before = _compiled(spark)
+    assert query(7001) == first
+    assert _compiled(spark) == before
+
+
+def test_warm_dedup_pass_reuses_compiled_classes(spark, sf_smoke):
+    """A pass of two dedup operators needs more classes than Spark's
+    default cache holds, so at the default every warm pass recompiled most
+    of them. With the engine's cap a warm pass compiles nothing — once it
+    has met its plan variants: AQE picks a self-join's broadcast side by
+    which side's stage finishes first, so the first warm pass or two can
+    still meet a not-yet-compiled build-side variant."""
+    from caffeonspark_spark.multimodal.imagehash import image_dedup_map_query
+    from caffeonspark_spark.operators.dedup import clean_corpus, unpersist_cached
+
+    def one_pass():
+        out = []
+        for op in (clean_corpus, image_dedup_map_query):
+            unpersist_cached()
+            spark.catalog.clearCache()
+            out.append(sorted(map(tuple, op(spark, sf_smoke).collect())))
+        return out
+
+    first = one_pass()
+    warm = []
+    while len(warm) < 4 and 0 not in warm:
+        before = _compiled(spark)
+        assert one_pass() == first
+        warm.append(_compiled(spark) - before)
+    assert 0 in warm, f"warm passes recompiled {warm} classes"
+
+
+def test_default_driver_memory_rule(monkeypatch, tmp_path):
+    from caffeonspark_spark import engine
+
+    def with_total(kb):
+        path = tmp_path / f"meminfo{kb}"
+        path.write_text(f"MemTotal:       {kb} kB\nMemFree:        1024 kB\n")
+        monkeypatch.setattr(engine, "_MEMINFO", str(path))
+        return engine.default_driver_memory()
+
+    assert with_total(15 << 20) == "6144m"  # 40 % of a 15 GB host
+    assert with_total(100 << 20) == "40960m"
+    assert with_total(120 << 20) == "48g"  # 40 % reaches the cap exactly
+    assert with_total(512 << 20) == "48g"
+    monkeypatch.setattr(engine, "_MEMINFO", str(tmp_path / "absent"))
+    assert engine.default_driver_memory() == "48g"
