@@ -118,3 +118,131 @@ def test_default_driver_memory_rule(monkeypatch, tmp_path):
     assert with_total(512 << 20) == "48g"
     monkeypatch.setattr(engine, "_MEMINFO", str(tmp_path / "absent"))
     assert engine.default_driver_memory() == "48g"
+
+
+def _write_zip(path, modules):
+    import os
+    import zipfile
+
+    tmp = f"{path}.new"
+    with zipfile.ZipFile(tmp, "w") as z:
+        for name, src in modules.items():
+            z.writestr(name, src)
+    os.replace(tmp, path)  # a new file, as an upload or addPyFile would be
+
+
+def test_zipimport_invalidation_is_stat_guarded(monkeypatch, tmp_path):
+    import collections
+    import importlib
+    import sys
+    import zipimport
+
+    guarded = getattr(zipimport.zipimporter.invalidate_caches, "stat_guarded", False)
+    if sys.version_info >= (3, 13):
+        assert not guarded  # 3.13 invalidates lazily upstream
+        return
+    assert guarded
+
+    archive = str(tmp_path / "zpkg.zip")
+    modules = {
+        "zpkg/__init__.py": "",
+        "zpkg/a/__init__.py": "",
+        "zpkg/a/m.py": "X = 1\n",
+        "zpkg/b/__init__.py": "",
+        "zpkg/b/m.py": "X = 2\n",
+    }
+    _write_zip(archive, modules)
+    monkeypatch.syspath_prepend(archive)
+    try:
+        import zpkg.a.m
+        import zpkg.b.m
+
+        importers = [
+            f for p, f in sys.path_importer_cache.items()
+            if p.startswith(archive) and isinstance(f, zipimport.zipimporter)
+        ]
+        assert len(importers) == 4  # zpkg.zip, then zpkg.zip/zpkg{,/a,/b}
+        assert zpkg.a.m.X + zpkg.b.m.X == 3
+
+        reads = collections.Counter()
+        real = zipimport._read_directory
+
+        def counting(path):
+            reads[path] += 1
+            return real(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counting)
+        importlib.invalidate_caches()
+        assert reads[archive] == 1  # once per archive, not per importer
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads[archive] == 1  # unchanged: no re-read
+
+        _write_zip(archive, {**modules, "zpkg/b/new.py": "X = 3\n"})
+        importlib.invalidate_caches()
+        assert reads[archive] == 2
+        from zpkg.b import new
+
+        assert new.X == 3
+    finally:
+        for name in [m for m in sys.modules if m == "zpkg" or m.startswith("zpkg.")]:
+            del sys.modules[name]
+        for p in [p for p in sys.path_importer_cache if p.startswith(archive)]:
+            del sys.path_importer_cache[p]
+
+
+def make_worker_zip_reads():
+    # returned as a closure so cloudpickle ships it BY VALUE to workers
+    # (a module-level function in a test module isn't importable there)
+    def worker_zip_reads(batches):
+        """Runs in an executor Python worker: import the engine (as
+        unpickling any engine function does), then count zip directory
+        reads over two ``importlib.invalidate_caches()`` calls — the call
+        PySpark makes at the start of every task."""
+        import collections
+        import importlib
+        import json
+        import sys
+        import zipimport
+
+        import caffeonspark_spark  # noqa: F401  (installs the guard)
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        reads = collections.Counter()
+        real = zipimport._read_directory
+
+        def counting(archive):
+            reads[archive] += 1
+            return real(archive)
+
+        zipimport._read_directory = counting
+        try:
+            calls = []
+            for _ in range(2):
+                reads.clear()
+                importlib.invalidate_caches()
+                calls.append(dict(reads))
+        finally:
+            zipimport._read_directory = real
+        zips = sorted({  # pyspark.zip, the py4j zip, the spark-core jar
+            f.archive for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+        })
+        out = json.dumps({"zips": zips, "calls": calls})
+        yield pa.RecordBatch.from_pydict({"out": [out]})
+
+    return worker_zip_reads
+
+
+def test_worker_rereads_each_zip_at_most_once(spark):
+    import json
+
+    df = spark.range(1, numPartitions=1).mapInArrow(make_worker_zip_reads(), "out string")
+    got = json.loads(df.collect()[0]["out"])
+    assert got["zips"], "expected zip archives (pyspark.zip) on the worker's sys.path"
+    first, second = got["calls"]
+    assert set(first) <= set(got["zips"]), first
+    assert all(n == 1 for n in first.values()), first
+    assert second == {}, second

@@ -59,6 +59,46 @@ def test_test_model_vector_mean(spark, mnist_like):
     assert out["accuracy"] == [1.0]  # identity model is always "right"
 
 
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_test_model_two_blobs_one_pass(spark, mnist_like):
+    """Both blobs' means come from one aggregate, bit-identical to one
+    ``vector_mean_long`` per blob over a persisted inference pass, in
+    fewer jobs than that per-blob path."""
+    from caffeonspark_spark.functions.arrays import vector_mean_long
+
+    blobs = ["ip1", "accuracy"]
+    model = make_identity_model()
+
+    def per_blob():
+        feat = features(mnist_like, model, SPECS, blobs, batch_size=16).persist()
+        try:
+            return {
+                b: [r["mean_val"] for r in vector_mean_long(feat, b).orderBy("pos").collect()]
+                for b in blobs
+            }
+        finally:
+            feat.unpersist()
+
+    want, old_jobs = _jobs_in_group(spark, "test-model-per-blob", per_blob)
+    got, new_jobs = _jobs_in_group(
+        spark, "test-model-one-pass",
+        lambda: eval_model(mnist_like, model, SPECS, blobs, batch_size=16),
+    )
+    assert got == want
+    assert got["ip1"] == [19.5, 20.5, 21.5, 22.5] and got["accuracy"] == [1.0]
+    assert new_jobs < old_jobs, (new_jobs, old_jobs)
+
+
 def test_partition_math_errors():
     cfg = TrainConfig(batch_size=64, devices=1, test_interval=10)
     with pytest.raises(ValueError, match="insufficient"):
