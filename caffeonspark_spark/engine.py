@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 import zipimport
 from dataclasses import dataclass, field
 
@@ -78,15 +79,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
 #: per-partition byte target for every width the engine derives from a
-#: measured size (memo-pin read views, streaming state partitions) — the
+#: measured size (pin read views, streaming state partitions) — the
 #: role AQE's ``advisoryPartitionSizeInBytes`` plays for shuffle output,
 #: and its 64 MB default, so a derived width narrows exactly where AQE
-#: would have coalesced a shuffle of the same bytes. Overridable for
-#: production with SPARK_GRAFT_PIN_PARTITION_BYTES — named for the pins,
-#: but it sets the bounded-replay stream state width too.
-PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PIN_PARTITION_BYTES", str(64 << 20))
-)
+#: would have coalesced a shuffle of the same bytes.
+PARTITION_BYTES = 64 << 20
 
 
 #: where the default driver heap is sized from (Linux); patched by tests
@@ -166,12 +163,12 @@ def get_spark(config: Config | None = None) -> SparkSession:
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # r17: let AQE re-optimize the plan fragment that BUILDS a cached
         # relation (default false keeps a cache's output partitioning
-        # fixed for exchange reuse). Every memo pin's fill otherwise runs
+        # fixed for exchange reuse). Every ``pin`` fill otherwise runs
         # its shuffles at the static spark.sql.shuffle.partitions width no
         # matter how small the data — profiled as near-empty 32-task
         # stages inside every pin build. With this on, pin builds get the
         # same size-adaptive coalescing every other query gets; the pin
-        # read side is handled by the dedup memo's byte-sized view.
+        # read side is handled by ``pin``'s byte-sized view.
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
@@ -287,7 +284,8 @@ def scale_out(df, min_partitions: int | None = None):
     single-task job per scale_out call site (r16; the real action then
     re-ran the same subtree). Every current call site hands scale_out a
     scan-rooted narrow frame, for which the initial-plan count equals the
-    executed count exactly.
+    executed count exactly. When the probe fails, ``df`` is returned
+    unchanged rather than paying that hidden job.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
@@ -297,7 +295,122 @@ def scale_out(df, min_partitions: int | None = None):
             plan = plan.initialPlan()
         current = plan.execute().getNumPartitions()
     except Exception:  # pragma: no cover - non-classic backend / plan quirk
-        current = df.rdd.getNumPartitions()
+        return df
     if current < target:
         return df.repartition(target)
     return df
+
+
+#: frames ``pin`` persisted, for ``unpersist_cached`` to release
+_PINNED: list = []
+_PIN_LOCK = threading.Lock()
+
+
+def _narrow_view(df):
+    """Size-adaptive pin width (r17, guide §2.2 "fewer, larger map tasks" /
+    §6 split sizing): a freshly FILLED pin inherits the partitioning of the
+    subtree that built it — locally ``scale_out``'s defaultParallelism, on
+    a cluster the scan/shuffle width — which is right for BUILDING the pin
+    (the front-end compute wants the parallelism) but wrong for READING a
+    metadata-sized result: every downstream stage schedules one near-empty
+    task per build partition (profiled on video_dedup_map: 32-task stages
+    with 0.2-0.8 s of TOTAL task work each). The engine sets
+    ``canChangeCachedPlanOutputPartitioning=true``, but that only lets AQE
+    re-optimize the plan that BUILDS the pin: a build ending in a scan or
+    a fixed-count repartition (``scale_out``) is never coalesced, and
+    every stage that reads the cached relation runs one task per cached
+    partition. So derive the READ width from the pin's own MATERIALIZED
+    byte size — the measurement the eager fill already paid for — with
+    ``partitions_for_bytes`` (the shared 64 MB target AQE uses for
+    shuffles). Corpus-sized pins keep full width (bytes/64 MB ≥ build
+    width); only metadata-sized pins narrow.
+
+    The width probe cannot overstate what a build coalesced: once the pin
+    is cached, ``df``'s executed plan is a scan of the cached relation, so
+    the probe reads the partition count of the materialized cache RDD —
+    after AQE's coalescing of the build, not the build's static width.
+    Returns a coalesce VIEW over the cached blocks (no second
+    materialization, no shuffle — the single read task fetches local cache
+    blocks), or None when the pin should keep its build width."""
+    try:
+        qe = df._jdf.queryExecution()
+        # py4j maps the BigInt straight to a Python int
+        size = int(qe.optimizedPlan().stats().sizeInBytes())
+        plan = qe.executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.initialPlan()
+        cur = plan.execute().getNumPartitions()
+    except Exception:  # pragma: no cover - non-classic backend
+        return None
+    want = partitions_for_bytes(size, cur)
+    if want >= cur:
+        return None
+    return df.coalesce(want)
+
+
+def pin(df, eager: bool = True, narrow: bool = True):
+    """Cache ``df`` once per plan and return a frame that reads the cache.
+
+    Spark's CacheManager is the memo: it matches cached data by plan, so a
+    separately built frame with an equal plan already reads a non-NONE
+    ``storageLevel`` and is not persisted again, while a different plan
+    gets its own cache entry and leaves earlier pins cached (a lazy plan
+    built on one must not silently recompute). After an external
+    ``spark.catalog.clearCache()`` (bench.py runs one between queries)
+    ``storageLevel`` reads NONE and the next pin re-persists.
+
+    ``eager`` fills the cache with one count() — only when this call
+    persisted ``df`` — and is right for pins that feed SEVERAL plan
+    subtrees: AQE submits exchange materializations concurrently, so a
+    lazy pin is computed once PER BRANCH before the first task populates a
+    block (profiled on image_dhash_pairs: three parallel jobs each paying
+    the whole hash front end). Pass ``eager=False`` for pins whose
+    consumers run strictly SEQUENTIALLY (an iterative fit, a single-action
+    pipeline): the first consumer's own action fills the cache, and an
+    up-front fill is a pure extra pass (the r16 kmeans_fit/minhash
+    regression — VERDICT r16 item 3). A lazy pin is returned as is.
+
+    ``narrow`` returns an eager pin through ``_narrow_view``, a coalesced
+    read of a metadata-sized cache (recomputed on every call; over a
+    filled cache it runs no job). ``narrow=False`` keeps the build width — required when the
+    consumers do HEAVY per-row work map-side on the pin (decode or
+    fingerprint passes), where read width IS the compute parallelism.
+
+    Every pinned frame is released by ``unpersist_cached()``; frames of a
+    stopped context leave the release list on the next pin (their blocks
+    died with it)."""
+    from pyspark import StorageLevel
+
+    with _PIN_LOCK:
+        _drop_stopped_locked()
+        fill = df.storageLevel == StorageLevel.NONE
+        if fill:
+            df.persist()
+            _PINNED.append(df)
+    if not eager:
+        return df
+    if fill:
+        # outside the lock: the fill is a real job. The count()
+        # materializes every column of the cached relation once
+        # (InMemoryRelation builds full rows regardless of the action's
+        # pruning); every branch then reads InMemoryTableScan.
+        df.count()
+    view = _narrow_view(df) if narrow else None
+    return df if view is None else view
+
+
+def _drop_stopped_locked() -> None:
+    """Forget pins of a stopped context: their blocks died with it, and
+    only a dead handle is left to release. Called under ``_PIN_LOCK``."""
+    _PINNED[:] = [
+        p for p in _PINNED if p.sparkSession.sparkContext._jsc is not None
+    ]
+
+
+def unpersist_cached() -> None:
+    """Release every frame ``pin`` persisted."""
+    with _PIN_LOCK:
+        _drop_stopped_locked()
+        for df in _PINNED:
+            df.unpersist()
+        _PINNED.clear()

@@ -982,13 +982,12 @@ def audio_fingerprint_invariance(spark, sf_dir: str) -> DataFrame:
                 {"id": ids, "pcm": pcm, "ulaw": ulaw, "ns": ns}
             )
 
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
-    # both fingerprint sides read the clip table; without the (released)
-    # memo the synth + dual-encode subtree executes once PER SIDE —
+    # both fingerprint sides read the clip table; without the pin the
+    # synth + dual-encode subtree executes once PER SIDE —
     # measured ~2x the row's whole work
-    clips = _persist_replacing(
-        "audio_invariance_clips",
+    clips = pin(
         docs.mapInPandas(gen, "id long, pcm binary, ulaw binary, ns int"),
         # narrow=False: both decode->log-mel fingerprint passes run
         # MAP-SIDE over this pin — its read width is their parallelism
@@ -1118,8 +1117,7 @@ def _position_pair_phase(
     5. the clip gate: a pair emits iff ≥ ``min_frames`` positions match.
 
     Both inputs must already be persisted (they feed the cap agg and a
-    candidate side each) — the callers own that via the dedup module's
-    plan-hash-keyed memo."""
+    candidate side each) — the callers own that via ``engine.pin``."""
     from caffeonspark_spark.multimodal.imagehash import (
         packed_bands,
         packed_hamming,
@@ -1185,15 +1183,13 @@ def near_dup_video_pairs(
     widening the bucket key (hot-band cap per position); the final agg
     is one shuffle of candidate-pair rows. The hash table feeds FIVE plan
     subtrees (hot-cap agg, both candidate sides, both Hamming sides), so
-    it is persisted through the dedup module's plan-hash-keyed memo —
-    mirroring ``near_dup_band_pairs`` — or the upstream decode→hash
-    ``mapInPandas`` pass would recompute once per subtree; released by
-    ``dedup.unpersist_cached()``. The pair phase itself is the shared
+    it is cached with ``engine.pin`` — mirroring ``near_dup_band_pairs``
+    — or the upstream decode→hash ``mapInPandas`` pass would recompute
+    once per subtree; released by ``engine.unpersist_cached()``. The pair phase itself is the shared
     ``_position_pair_phase`` (self-join form)."""
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
-    ha = _persist_replacing(
-        "video_frame_hashes",
+    ha = pin(
         frame_hashes.select(
             F.col(id_col).alias("id"),
             F.col(frame_col).alias("fi"),
@@ -1231,11 +1227,10 @@ def video_dedup_against_corpus(
     The pair phase is the shared ``_position_pair_phase`` (bipartite
     form: no half-triangle predicate, hot cap on the corpus side) — the
     r13 sync note is retired."""
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
-    def prep(t: DataFrame, memo: str) -> DataFrame:
-        return _persist_replacing(
-            memo,
+    def prep(t: DataFrame) -> DataFrame:
+        return pin(
             t.select(
                 F.col(id_col).alias("id"),
                 F.col(frame_col).alias("fi"),
@@ -1243,8 +1238,8 @@ def video_dedup_against_corpus(
             ),
         )
 
-    hn = prep(new_frames, "video_corpus_dedup_new")
-    hr = prep(corpus_frames, "video_corpus_dedup_ref")
+    hn = prep(new_frames)
+    hr = prep(corpus_frames)
     return _position_pair_phase(
         hn, hr, "new_id", "ref_id",
         max_hamming, max_band_df, min_frames, self_pairs=False,
@@ -1281,13 +1276,10 @@ def video_dedup_map(
     Scale contract: the exact group moves (id, 4·n_frames smallints) —
     never frames; the near pass runs on one clip per DISTINCT sequence;
     the final map is two 8-byte-key equi-joins."""
-    from caffeonspark_spark.operators.dedup import (
-        _persist_replacing,
-        connected_components,
-    )
+    from caffeonspark_spark.engine import pin
+    from caffeonspark_spark.operators.dedup import connected_components
 
-    ha = _persist_replacing(
-        "video_dedup_frame_hashes",
+    ha = pin(
         frame_hashes.select(
             F.col(id_col).alias("id"),
             F.col(frame_col).alias("fi"),
@@ -1299,8 +1291,7 @@ def video_dedup_map(
             F.collect_list(F.struct("fi", "b0", "b1", "b2", "b3"))
         ).alias("_seq")
     )
-    exact_keep = _persist_replacing(
-        "video_dedup_exact_reps",
+    exact_keep = pin(
         seq.groupBy("_seq").agg(F.min("id").alias("rep")),
     )
     exact_map = seq.join(exact_keep, "_seq").select("id", "rep")

@@ -235,9 +235,8 @@ def near_dup_band_pairs(
     (4 Exchanges) the previous shape paid to re-attach bands to pairs,
     for +8 B per exploded band row. Pure JVM expressions end-to-end; no
     window, no crossJoin. The hash table feeds three plan subtrees
-    (hot-cap agg + both candidate sides), so it is persisted through the
-    dedup module's released memo — the minhash signature-table
-    precedent; at 100 TB this is the hash table written once and reused
+    (hot-cap agg + both candidate sides), so it is cached with
+    ``engine.pin`` — the minhash signature-table precedent; at 100 TB this is the hash table written once and reused
     by every downstream job.
 
     The cap drops a hot bucket's pairs ENTIRELY — including true
@@ -247,10 +246,9 @@ def near_dup_band_pairs(
     representative (``dedup_exact``'s shape on an 8-byte key) — and band
     only the survivors; the cap then prunes genuinely-degenerate bands
     (black frames), not duplicate mass."""
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
-    ha = _persist_replacing(
-        "image_hash_bands",
+    ha = pin(
         hashed.select(F.col(id_col).alias("id"), "b0", "b1", "b2", "b3"),
     )
     long_bands = ha.select(
@@ -720,24 +718,20 @@ def image_dedup(
     banding exactly like byte-identical thumbnails). Per-FRAME video
     hashes do not: the clip gate (≥ min_frames matched positions) needs
     ``near_dup_video_pairs``' position-keyed pair phase instead."""
-    from caffeonspark_spark.operators.dedup import (
-        _persist_replacing,
-        connected_components,
-    )
+    from caffeonspark_spark.engine import pin
+    from caffeonspark_spark.operators.dedup import connected_components
 
     # the input hash table feeds TWO consumers (the exact groupBy and the
     # final id->rep map join) — persist it or the per-image hash pass runs
     # twice (measured ~8 s of the query's cost at sf0.1 before the pin)
-    ha = _persist_replacing(
-        "image_dedup_hash_table",
+    ha = pin(
         hashed.select(F.col(id_col).alias("id"), "b0", "b1", "b2", "b3"),
     )
-    exact_keep = _persist_replacing(
-        "image_dedup_exact_reps",
+    exact_keep = pin(
         ha.groupBy("b0", "b1", "b2", "b3").agg(F.min("id").alias("rep")),
         # three consumers: the id->rep map, the survivor hash table, and
         # the component base — without the pin each re-runs the groupBy
-        # SHUFFLE over ha. The near pass additionally memo-pins its own
+        # SHUFFLE over ha. The near pass additionally pins its own
         # (id, b0..b3) reprojection of these rows: ~40 B/distinct-hash of
         # duplicated cache, accepted — two extra full shuffles of the
         # distinct-hash table would cost more at 100 TB than the copy
@@ -794,17 +788,15 @@ def image_dedup_against_corpus(
     ref×ref), the hot cap is computed on the CORPUS side (the side big
     enough to have degenerate bands), and the exact Hamming is computed
     INLINE on the candidate join via the packed hash column (r16 — see
-    ``near_dup_band_pairs``). Both hash tables persist through the
-    released memo — the corpus side feeds the cap agg and a candidate
+    ``near_dup_band_pairs``). Both hash tables are cached with
+    ``engine.pin`` — the corpus side feeds the cap agg and a candidate
     side."""
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
-    hn = _persist_replacing(
-        "image_corpus_dedup_new",
+    hn = pin(
         new_hashes.select(F.col(id_col).alias("id"), "b0", "b1", "b2", "b3"),
     )
-    hr = _persist_replacing(
-        "image_corpus_dedup_ref",
+    hr = pin(
         corpus_hashes.select(F.col(id_col).alias("id"), "b0", "b1", "b2", "b3"),
     )
 

@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from caffeonspark_spark.catalog import load_table
-from caffeonspark_spark.engine import partitions_for_bytes, scale_out
+from caffeonspark_spark.engine import (  # noqa: F401 — unpersist_cached re-exported
+    pin,
+    scale_out,
+    unpersist_cached,
+)
 from caffeonspark_spark.functions.text import (
     char_fold_vec,
     doc_fingerprint,  # noqa: F401 — production (xxhash64) fingerprint API
@@ -48,203 +52,10 @@ MINHASH_BANDS = 16
 MINHASH_ROWS_PER_BAND = 4
 _MH_PRIME = (1 << 31) - 1  # Mersenne prime; products stay in long range
 
-# Persisted intermediates (shingle/signature/bucket tables) feed BOTH sides
-# of a self-join, so each call site caches its subtree exactly once. The
-# cache is memoizing and append-only: keyed by (session, site, analyzed-plan
-# semanticHash), so (a) the same input returns the SAME persisted DataFrame
-# — repeat invocations reuse rather than re-persist, (b) a different input
-# at the same site gets its own entry WITHOUT unpersisting the previous one
-# (an earlier, not-yet-evaluated plan may still reference it; eager
-# replacement silently recomputed both self-join sides), and (c) an external
-# `spark.catalog.clearCache()` (bench.py does this between queries) is safe:
-# on a cache hit whose blocks were cleared, storageLevel reads NONE and the
-# entry is re-persisted. ``unpersist_cached()`` releases everything — call
-# it at end-of-run (bench.py does); entries from stopped sessions hold only
-# dead handles, their blocks died with the session.
-_CACHED: dict[tuple, DataFrame] = {}
-_CACHE_LOCK = __import__("threading").Lock()
-#: session token -> weakref(session); lets the cache detect sessions whose
-#: underlying context has stopped and drop their (dead-handle) entries
-#: without holding the session object inside key tuples.
-_SESSION_REFS: dict[str, object] = {}
-
-
-def _session_token(session) -> str:
-    """Stable per-session identity WITHOUT putting the session object in
-    key tuples: a uuid stamped onto the session (so sibling
-    ``newSession()``s stay distinct, unlike applicationId, and GC can't
-    recycle it onto a new session, unlike id()). The session is tracked by
-    weakref only — a long-lived process creating many short-lived sessions
-    no longer pins each one in the memo keys."""
-    import uuid
-    import weakref
-
-    tok = getattr(session, "_cos_dedup_token", None)
-    if tok is None:
-        tok = uuid.uuid4().hex
-        try:
-            session._cos_dedup_token = tok
-        except Exception:  # pragma: no cover - unsettable session proxy
-            tok = f"id-{id(session)}"
-    if tok not in _SESSION_REFS:
-        try:
-            _SESSION_REFS[tok] = weakref.ref(session)
-        except TypeError:  # pragma: no cover - non-weakref-able proxy
-            _SESSION_REFS[tok] = None
-    return tok
-
-
-def _session_stopped(tok: str) -> bool:
-    ref = _SESSION_REFS.get(tok)
-    if ref is None:
-        return False
-    session = ref()
-    if session is None:
-        return True
-    try:
-        return session.sparkContext._jsc is None
-    except Exception:
-        return True
-
-
-def _purge_dead_locked() -> None:
-    """Drop entries whose session is stopped/collected (their persisted
-    blocks died with the session — only dead handles remain). Called under
-    the lock, opportunistically on every persist and from
-    ``unpersist_cached``. Iterates a SNAPSHOT of the token table:
-    ``_session_token`` inserts without the lock (it runs before
-    ``_persist_replacing`` takes it) and ``_session_stopped``'s py4j
-    round-trip releases the GIL, so iterating the live dict could raise
-    'dictionary changed size during iteration'."""
-    dead = {t for t in list(_SESSION_REFS) if _session_stopped(t)}
-    if not dead:
-        return
-    for k in list(_CACHED):
-        if k[0] in dead:
-            _CACHED.pop(k, None)
-            _VIEWS.pop(k, None)
-    for t in dead:
-        _SESSION_REFS.pop(t, None)
-
-
-def _cache_key(key: str, df: DataFrame) -> tuple | None:
-    """(session-token, site, plan) identity, or None when no SAFE identity
-    exists. Without the analyzed-plan semanticHash (non-classic backends)
-    two different inputs at the same site would collapse into one entry and
-    silently return stale data — such entries get a unique untracked key
-    instead (still released by ``unpersist_cached``)."""
-    try:
-        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - non-classic backend
-        return None
-    return (_session_token(df.sparkSession), key, plan_hash)
-
-
-#: coalesced read views over pinned entries (r17): same keys as _CACHED,
-#: cleared together. The VALUE in _CACHED stays the persisted DataFrame —
-#: unpersist() must be called on the exact cached plan to release blocks.
-_VIEWS: dict[tuple, DataFrame] = {}
-
-
-def _narrow_view(df: DataFrame) -> DataFrame | None:
-    """Size-adaptive pin width (r17, guide §2.2 "fewer, larger map tasks" /
-    §6 split sizing): a freshly FILLED pin inherits the partitioning of the
-    subtree that built it — locally ``scale_out``'s defaultParallelism, on
-    a cluster the scan/shuffle width — which is right for BUILDING the pin
-    (the front-end compute wants the parallelism) but wrong for READING a
-    metadata-sized result: every downstream stage schedules one near-empty
-    task per build partition (profiled on video_dedup_map: 32-task stages
-    with 0.2-0.8 s of TOTAL task work each). The engine sets
-    ``canChangeCachedPlanOutputPartitioning=true``, but that only lets AQE
-    re-optimize the plan that BUILDS the pin: a build ending in a scan or
-    a fixed-count repartition (``scale_out``) is never coalesced, and
-    every stage that reads the cached relation runs one task per cached
-    partition. So derive the READ width from the pin's own MATERIALIZED
-    byte size — the measurement the eager fill already paid for — with
-    ``engine.partitions_for_bytes`` (the shared 64 MB target AQE uses for
-    shuffles). Corpus-sized pins keep full width (bytes/64 MB ≥ build
-    width); only metadata-sized pins narrow.
-    Returns a coalesce VIEW over the cached blocks (no second
-    materialization, no shuffle — the single read task fetches local cache
-    blocks), or None when the pin should keep its build width."""
-    try:
-        qe = df._jdf.queryExecution()
-        # py4j maps the BigInt straight to a Python int
-        size = int(qe.optimizedPlan().stats().sizeInBytes())
-        plan = qe.executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.initialPlan()
-        cur = plan.execute().getNumPartitions()
-    except Exception:  # pragma: no cover - non-classic backend
-        return None
-    want = partitions_for_bytes(size, cur)
-    if want >= cur:
-        return None
-    return df.coalesce(want)
-
-
-def _persist_replacing(
-    key: str, df: DataFrame, eager: bool = True, narrow: bool = True
-) -> DataFrame:
-    """Memo-pin ``df`` (see the cache notes above). ``eager`` fills the
-    cache with one count() — keep it True for pins that feed SEVERAL plan
-    subtrees (AQE submits exchange materializations concurrently, so a
-    lazy pin is computed once PER BRANCH before the first task populates a
-    block — profiled on image_dhash_pairs: three parallel jobs each paying
-    the whole hash front end). Pass ``eager=False`` for pins whose
-    consumers run strictly SEQUENTIALLY (an iterative fit, a single-action
-    pipeline): there the first consumer's own action populates the cache
-    and an up-front fill is a pure extra pass (the r16 kmeans_fit/minhash
-    driver regression — VERDICT r16 item 3). ``narrow=False`` opts a pin
-    out of the size-adaptive read-width coalesce — required when the
-    consumers do HEAVY per-row work map-side on the pin (decode/fingerprint
-    passes), where read width IS the compute parallelism."""
-    from pyspark import StorageLevel
-
-    full_key = _cache_key(key, df)
-    if full_key is None:  # pragma: no cover - non-classic backend
-        # no safe memoization identity: persist untracked-but-releasable
-        df.persist()
-        with _CACHE_LOCK:
-            _CACHED[("untracked", key, id(df))] = df
-        return df
-    with _CACHE_LOCK:
-        _purge_dead_locked()
-        df = _CACHED.setdefault(full_key, df)
-        view = _VIEWS.get(full_key)
-        fill = df.storageLevel == StorageLevel.NONE
-        if fill:
-            df.persist()
-    if fill:
-        if not eager:
-            return df
-        # EAGER fill (r16), outside the lock — the fill is a real job. The
-        # count() materializes every column of the cached relation once
-        # (InMemoryRelation builds full rows regardless of the action's
-        # pruning); every branch then reads InMemoryTableScan. The memo is
-        # released by unpersist_cached() between bench runs, so nothing
-        # persists across runs.
-        df.count()
-        view = _narrow_view(df) if narrow else None
-        if view is not None:
-            with _CACHE_LOCK:
-                # keep the PINNED frame as the _CACHED value (unpersist
-                # must see the cached plan); readers get the narrow view
-                _VIEWS[full_key] = view
-    return view if view is not None else df
-
-
-def unpersist_cached() -> None:
-    """Release every DataFrame persisted by this module's operators."""
-    with _CACHE_LOCK:
-        _VIEWS.clear()
-        for key in list(_CACHED):
-            try:
-                _CACHED.pop(key).unpersist()
-            except Exception:  # pragma: no cover - session already stopped
-                pass
-        _purge_dead_locked()
-        _SESSION_REFS.clear()
+# Intermediates that feed several plan subtrees (shingle/signature/bucket
+# tables on both sides of a self-join) are cached through ``engine.pin``,
+# which lets Spark's CacheManager match them by plan; ``unpersist_cached``
+# is re-exported here for callers that release them between runs.
 
 
 def _tokens(text_col: str = "text") -> F.Column:
@@ -416,7 +227,7 @@ def ngram_jaccard_pairs(
     (below) when even the pruned candidate set is too large.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = _persist_replacing("ngram_shingles", shingle_sets(docs))
+    sh = pin(shingle_sets(docs))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     if max_df is not None:
         sh = prune_stop_shingles(sh, max_df)
@@ -926,9 +737,7 @@ def minhash_lsh_pairs_df(
     # filled it. On an idle local scheduler one side fills first; on a
     # busy cluster AQE can run the two sides concurrently and compute the
     # signature subtree once per side. Fill eagerly if that shows up.
-    sigs = _persist_replacing(
-        "minhash_sigs", minhash_signatures(docs), eager=False
-    )
+    sigs = pin(minhash_signatures(docs), eager=False)
     bands = banded_signatures(sigs, hashed=True)
     cand = _banded_candidate_pairs(bands, bands, "doc_id", "id_a", "id_b", True)
     return (
@@ -959,8 +768,7 @@ def minhash_lsh_pairs_portable_df(
     4-long array (~32 B) instead of an 8-byte hash — acceptable; at 100 TB
     prefer the xxhash64 production path, this one exists to make composed
     pipelines oracle-checkable."""
-    sigs = _persist_replacing(
-        "minhash_sigs_portable",
+    sigs = pin(
         minhash_signatures_portable_df(docs, id_col=id_col, text_col=text_col),
         # eager=False: same single-action shape as minhash_lsh_pairs_df
         eager=False,
@@ -1476,10 +1284,9 @@ def clean_corpus(spark: SparkSession, sf_dir: str, neardup_threshold: float = 0.
     # (16 B and 8 B per row) but their SUBTREES are corpus passes (token
     # stats over text; xxhash64 group over text), and each was referenced
     # from several branches (the sig path, the exact filter, the final
-    # projection) — tree-multiplicative re-derivation. Pin both through
-    # the released memo; the corpus text itself is never persisted.
-    quality = _persist_replacing(
-        "clean_corpus_quality",
+    # projection) — tree-multiplicative re-derivation. Pin both; the
+    # corpus text itself is never persisted.
+    quality = pin(
         quality_filter(spark, sf_dir).select("doc_id", "n_tokens"),
     )
     docs = load_table(spark, sf_dir, "documents").join(
@@ -1489,8 +1296,7 @@ def clean_corpus(spark: SparkSession, sf_dir: str, neardup_threshold: float = 0.
     # exact dedup groups on the 8-byte text hash, not the document text —
     # the shuffle moves (hash, id) pairs instead of full documents (the
     # SCALE.md "group on xxhash64(text)" rule; collision odds ~n²/2^64)
-    exact_ids = _persist_replacing(
-        "clean_corpus_exact_keep",
+    exact_ids = pin(
         docs.select("doc_id", F.xxhash64(F.col("text")).alias("_th"))
         .groupBy("_th")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -1536,19 +1342,17 @@ def clean_corpus_portable(
     from caffeonspark_spark.operators.textops import quality_filter
 
     # r16: same small-table pinning as clean_corpus — quality output and
-    # exact-keep ids memo-persisted so their corpus-pass subtrees run
+    # exact-keep ids pinned so their corpus-pass subtrees run
     # once, and the final branch composes the pinned id tables instead of
     # re-deriving the text join (see clean_corpus)
-    quality = _persist_replacing(
-        "clean_corpus_quality",
+    quality = pin(
         quality_filter(spark, sf_dir).select("doc_id", "n_tokens"),
     )
     docs = load_table(spark, sf_dir, "documents").join(
         quality.select("doc_id"), "doc_id"
     )
 
-    exact_ids = _persist_replacing(
-        "clean_corpus_portable_exact_keep",
+    exact_ids = pin(
         docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id"),
     )
@@ -2228,12 +2032,12 @@ def winnow_overlap_pairs(
     5·10^11 pairs on its own. After pruning, pair count is bounded by
     Σ df·(df-1)/2 ≤ max_df · Σ df: linear in surviving fingerprint
     occurrences. One fingerprint materialization feeds both the df
-    counts and the join — `_persist_replacing` pins it, so the
+    counts and the join — `engine.pin` caches it, so the
     interpreted winnowing projection (the 43 s→1.7 s staged stage)
     executes once, not once per reference; released by
     `unpersist_cached` like every shared dedup intermediate."""
     docs = load_table(spark, sf_dir, "documents")
-    fps = _persist_replacing(f"winnow_fps_{k}_{w}", _winnow_fps(docs, k, w))
+    fps = pin(_winnow_fps(docs, k, w))
     df_counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     kept = fps.join(
         df_counts.where(F.col("df") <= max_df).select("fp"), "fp"
@@ -2471,7 +2275,7 @@ def edit_distance_dup_pairs(
     p = docs.where(F.length("text") >= 16).select(
         "doc_id", F.lower(F.substring("text", 1, prefix_len)).alias("pre")
     )
-    # NOT memo-pinned, deliberately (r16, measured): this table feeds the
+    # NOT pinned, deliberately (r16, measured): this table feeds the
     # hot-block agg, the anti-join and both self-join sides, but it is
     # CORPUS-CARDINALITY (one 48-char row per doc per anchor) — pinning it
     # tripled process-tree CPU at sf0.1 (4.8 → 14.8 s: columnar cache

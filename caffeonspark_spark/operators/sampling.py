@@ -514,7 +514,7 @@ def _kmv_pairs_single_task(sk: DataFrame, k: int, scale: float) -> DataFrame:
         yield pd.DataFrame(rows, columns=cols)
 
     # coalesce(1) reads the ~n·k cached sketch blocks into one task — no
-    # shuffle, and the persisted memo keeps it from collapsing the corpus
+    # shuffle, and the pinned sketch keeps it from collapsing the corpus
     # pass itself to one task
     return sk.coalesce(1).mapInPandas(compute, schema)
 
@@ -524,7 +524,7 @@ def _kmv_overlap_from_hashes(h: DataFrame, k: int, modulus: int) -> DataFrame:
     build, per-source estimates, pairwise union-sketch merge, membership
     intersection (one implementation for the portable and native hash
     families)."""
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
     h = h.distinct()
     w = Window.partitionBy("source").orderBy("hv")
@@ -534,10 +534,9 @@ def _kmv_overlap_from_hashes(h: DataFrame, k: int, modulus: int) -> DataFrame:
     # two merge sides, two membership semi-joins, and the pair metadata
     # via est) — without the pin each consumer re-ran the full corpus
     # pass (r16 sweep: 92 Exchanges in one plan, the sketch subtree
-    # replicated throughout; 30 after). Persisted through the dedup
-    # module's released memo, the near_dup_band_pairs precedent.
-    sk = _persist_replacing(
-        f"kmv_sketch_{modulus}",
+    # replicated throughout; 30 after). Cached with ``engine.pin``, the
+    # near_dup_band_pairs precedent.
+    sk = pin(
         h.select("source", "hv", F.row_number().over(w).alias("rn"))
         .where(F.col("rn") <= k)
         .select("source", "hv"),

@@ -1033,19 +1033,18 @@ def kmeans_fit(
     # (id, vec) rows once; no-op on a real multi-split scan, and per-row
     # argmins/partials are row-local so partitioning cannot change values
     # (the agg is decimal-grid, order-independent).
-    # r16 (guide §5): pin the rebalanced training set through the released
-    # memo — Lloyd's re-reads it every iteration, and without the pin each
-    # round re-ran the parquet scan + rebalance exchange (the classic
-    # iterative-ML cache miss; released by unpersist_cached between runs).
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    # r16 (guide §5): pin the rebalanced training set — Lloyd's re-reads
+    # it every iteration, and without the pin each round re-ran the
+    # parquet scan + rebalance exchange (the classic iterative-ML cache
+    # miss; released by unpersist_cached between runs).
+    from caffeonspark_spark.engine import pin
 
     # eager=False (r17, VERDICT r16 item 3): Lloyd's consumers are strictly
     # SEQUENTIAL — iteration 1's own agg/collect populates the cache, so an
     # up-front fill was a pure extra materialization pass (driver measured
     # kmeans_fit 1.9 -> 2.7 s at sf0.1 from the eager fill; at scale the
     # pin still reads the training set once per fit, filled by round 1).
-    corpus = _persist_replacing(
-        "kmeans_fit_corpus",
+    corpus = pin(
         scale_out(corpus.select(id_col, vec_col)),
         eager=False,
     )
@@ -1197,16 +1196,15 @@ def _semantic_candidate_pairs(
     aliases."""
     cent = _collect_centroids(centroids, vec_col, id_col)
 
-    from caffeonspark_spark.engine import scale_out
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin, scale_out
 
-    def prep(t: DataFrame, memo: str) -> DataFrame:
+    def prep(t: DataFrame) -> DataFrame:
         # r16 (guide §1.2/§4): the cluster-local pair join is where the
         # work is (Σ|cluster|² dot folds), and it runs in the STREAM
         # side's scan partitions — a single-row-group local scan would
         # serialize every pair onto one task, so rebalance the narrow
         # (id, vec) rows first (scale_out: no-op on a real multi-split
-        # scan). The prepared side is memo-pinned: it feeds BOTH aliases
+        # scan). The prepared side is pinned: it feeds BOTH aliases
         # of the self-join (the norm fold + assign join previously ran
         # once per side), and pinning materializes ``_vd`` — the
         # double-cast vector — ONCE PER ROW, where the previous per-pair
@@ -1223,10 +1221,8 @@ def _semantic_candidate_pairs(
         # narrow=False: the per-pair dot folds run MAP-SIDE over this pin
         # (broadcast self-join), so its read width IS the pair-compute
         # parallelism — the serialization scale_out exists to prevent
-        return _persist_replacing(
-            memo,
-            narrow=False,
-            df=t.withColumn("_vd", vd)
+        return pin(
+            t.withColumn("_vd", vd)
             .withColumn("_nrm", F.sqrt(fold))
             .join(
                 kmeans_assign(t, cent, vec_col, id_col).select(
@@ -1234,10 +1230,11 @@ def _semantic_candidate_pairs(
                 ),
                 id_col,
             ),
+            narrow=False,
         )
 
-    ta = prep(left, "semantic_pair_side_a")
-    tb = ta if self_pairs else prep(right, "semantic_pair_side_b")
+    ta = prep(left)
+    tb = ta if self_pairs else prep(right)
     a, b = ta.alias("a"), tb.alias("b")
     dot_f = F.aggregate(
         F.zip_with(

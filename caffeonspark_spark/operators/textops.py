@@ -563,7 +563,7 @@ def bm25_rank(
     term's tf in the same projection (per-term higher-order filters over
     the array — no explode of all tokens: fan-out stays |docs| × |query
     terms|); the resulting (doc_id, dl, tf…) rows are metadata-sized
-    (integers only, never tokens) and memo-pinned, so the corpus-stats
+    (integers only, never tokens) and pinned, so the corpus-stats
     aggregate, the df counts and the scoring branch all read the pinned
     table instead of each re-tokenizing the corpus (r16, guide §5/§2.2:
     the old toks → {lens, tf} staging tokenized the corpus three times
@@ -574,7 +574,7 @@ def bm25_rank(
     exactly once; everything after is per-doc × per-term over pinned
     integers.
     """
-    from caffeonspark_spark.operators.dedup import _persist_replacing
+    from caffeonspark_spark.engine import pin
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", _toks().alias("ts"))
@@ -584,8 +584,7 @@ def bm25_rank(
         # (two args would receive (element, index))
         return F.size(F.filter(F.col("ts"), lambda x: x == F.lit(term)))
 
-    base = _persist_replacing(
-        "bm25_base",
+    base = pin(
         toks.select(
             "doc_id",
             F.size("ts").alias("dl"),

@@ -18,12 +18,12 @@ State-partition sizing: the bounded replays here — ``run_to_memory``
 when the query starts — go through ``start_sized``, which picks the
 stream's state-partition count from the bytes of its file sources at
 start: ``max(1, min(spark.sql.shuffle.partitions, source_bytes // 64 MB
-+ 1))``, the same ``engine.partitions_for_bytes`` target the memo pins
-read at (so ``SPARK_GRAFT_PIN_PARTITION_BYTES`` moves both). State-store
-cost is fixed per partition, not per row: a 10k-event stream at the
-32-partition session default ran 34 tasks and ~4 s of summed state
-commits per pass, against 3 tasks and ~0.05 s at one partition, with
-identical output. Spark records the count in a checkpoint's offset log,
++ 1))``, the same ``engine.partitions_for_bytes`` target ``engine.pin``
+reads a cached intermediate at (one ``engine.PARTITION_BYTES`` constant
+sets both). State-store cost is fixed per partition, not per row: a
+10k-event stream at the 32-partition session default ran 34 tasks and
+~4 s of summed state commits per pass, against 3 tasks and ~0.05 s at
+one partition, with identical output. Spark records the count in a checkpoint's offset log,
 so a restarted query keeps its first-start width whatever its source has
 grown to — which is why the sizing stays off long-running checkpointed
 sinks (``sinks.foreach_batch_parquet`` starts at the session width): a

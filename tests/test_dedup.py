@@ -353,93 +353,6 @@ def test_decontaminate_planted(spark, tmp_path):
     assert abs(out[2]["contamination"] - 0.2) < 1e-12
 
 
-def test_persist_replacing_memoizes_and_survives_clearcache(spark):
-    """The self-join cache contract: the same (site, input plan) returns the
-    SAME persisted DataFrame across invocations; an external clearCache()
-    (bench.py between queries) only drops blocks — the next call re-persists
-    instead of handing out an unpersisted handle; distinct inputs get
-    distinct entries without eagerly unpersisting the earlier one."""
-    from pyspark import StorageLevel
-
-    from caffeonspark_spark.operators.dedup import (
-        _persist_replacing,
-        unpersist_cached,
-    )
-
-    base = spark.range(100).withColumnRenamed("id", "k")
-    first = _persist_replacing(
-        "t_site", base.selectExpr("k", "k * 2 AS v"), narrow=False
-    )
-    again = _persist_replacing(
-        "t_site", base.selectExpr("k", "k * 2 AS v"), narrow=False
-    )
-    assert again is first  # memoized: double invocation reuses, not re-caches
-    assert first.storageLevel != StorageLevel.NONE
-    assert first.count() == 100
-
-    other = _persist_replacing(
-        "t_site", base.selectExpr("k", "k * 3 AS v"), narrow=False
-    )
-    assert other is not first
-    # the earlier entry must STILL be cached: lazy plans referencing it
-    # would silently recompute if replacement unpersisted it
-    assert first.storageLevel != StorageLevel.NONE
-
-    spark.catalog.clearCache()
-    refreshed = _persist_replacing(
-        "t_site", base.selectExpr("k", "k * 2 AS v"), narrow=False
-    )
-    assert refreshed is first
-    assert refreshed.storageLevel != StorageLevel.NONE  # re-persisted
-
-    unpersist_cached()
-    assert first.storageLevel == StorageLevel.NONE
-    assert other.storageLevel == StorageLevel.NONE
-
-
-def test_persist_replacing_narrow_view_and_lazy_fill(spark):
-    """r17 memo semantics: (a) a metadata-sized eager pin is returned as a
-    COALESCED read view over the cached blocks — same rows, fewer
-    partitions, the underlying pin stays the released handle; (b) repeat
-    invocation returns the same view; (c) ``eager=False`` skips both the
-    fill and the view (the first consumer's action fills the cache);
-    (d) ``unpersist_cached`` releases the pin and forgets the view."""
-    from pyspark import StorageLevel
-
-    from caffeonspark_spark.operators.dedup import (
-        _CACHED,
-        _VIEWS,
-        _persist_replacing,
-        unpersist_cached,
-    )
-
-    base = spark.range(200).repartition(8).withColumnRenamed("id", "k")
-    v1 = _persist_replacing("t_narrow", base.selectExpr("k", "k + 1 AS v"))
-    # tiny table -> the returned frame reads the pin at reduced width
-    assert v1.rdd.getNumPartitions() < 8
-    assert sorted(r["v"] for r in v1.collect()) == list(range(1, 201))
-    # the PINNED frame (not the view) is the released handle
-    pinned = [df for key, df in _CACHED.items() if key[1] == "t_narrow"]
-    assert len(pinned) == 1
-    assert pinned[0].storageLevel != StorageLevel.NONE
-    v2 = _persist_replacing("t_narrow", base.selectExpr("k", "k + 1 AS v"))
-    assert v2 is v1  # repeat invocation reuses the same view
-
-    lazy = _persist_replacing(
-        "t_lazy", base.selectExpr("k", "k + 2 AS v"), eager=False
-    )
-    # persisted (marked) but NOT filled or narrowed: the caller's first
-    # action fills the cache, so the build partitioning is preserved
-    assert lazy.storageLevel != StorageLevel.NONE
-    assert ("t_lazy" not in {key[1] for key in _VIEWS})
-    assert lazy.rdd.getNumPartitions() == 8
-    assert lazy.count() == 200
-
-    unpersist_cached()
-    assert not _VIEWS
-    assert pinned[0].storageLevel == StorageLevel.NONE
-
-
 def test_dedup_against_corpus_bipartite(spark, planted):
     """Cross-corpus dedup: new batch {0,1,3} vs reference {2,4,5}. Must
     flag the whitespace dup (1↔2 via 0's text) and NOT emit any
@@ -513,37 +426,6 @@ def test_remove_dup_passages_planted(spark, tmp_path):
     assert out[3]["clean_text"] == "" and out[3]["n_kept"] == 0
     assert out[4]["clean_text"] == "nothing shared in this document at all"
     assert out[4]["n_kept"] == out[4]["n_tokens"] == 7
-
-
-def test_cache_purges_dead_session_entries():
-    """Entries whose session is stopped or collected must be dropped by the
-    opportunistic purge — a long-lived process cycling short sessions must
-    not accumulate dead handles (r5 advice)."""
-    from caffeonspark_spark.operators import dedup as D
-
-    tok = "t-dead-fixture"
-    D._SESSION_REFS[tok] = lambda: None  # weakref surrogate: collected
-    D._CACHED[(tok, "site", 1)] = object()
-    live_tok = "t-live-fixture"
-
-    class _Ctx:
-        _jsc = object()
-
-    class _Sess:
-        sparkContext = _Ctx()
-
-    live = _Sess()
-    D._SESSION_REFS[live_tok] = lambda: live
-    D._CACHED[(live_tok, "site", 2)] = object()
-    try:
-        with D._CACHE_LOCK:
-            D._purge_dead_locked()
-        assert (tok, "site", 1) not in D._CACHED
-        assert tok not in D._SESSION_REFS
-        assert (live_tok, "site", 2) in D._CACHED
-    finally:
-        D._CACHED.pop((live_tok, "site", 2), None)
-        D._SESSION_REFS.pop(live_tok, None)
 
 
 def test_winnow_fingerprints_guarantee_planted(spark, tmp_path):

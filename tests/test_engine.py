@@ -1,4 +1,4 @@
-"""Engine facade tests: session config, catalog attach, read/write round-trip."""
+"""Engine tests: session config, catalog attach, read/write round-trip, pins."""
 
 from __future__ import annotations
 
@@ -101,6 +101,160 @@ def test_warm_dedup_pass_reuses_compiled_classes(spark, sf_smoke):
         assert one_pass() == first
         warm.append(_compiled(spark) - before)
     assert 0 in warm, f"warm passes recompiled {warm} classes"
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _cached_rdds(spark) -> dict:
+    """RDD id -> storage info of every RDD with cached blocks."""
+    return {i.id(): i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_pin_memoizes_by_plan_and_survives_clearcache(spark):
+    """Spark's CacheManager is the memo: a separately built frame with an
+    equal plan reuses the first pin's cache (one cached RDD, one fill, no
+    job on the repeat); a different plan gets its own cache and leaves the
+    earlier one cached (a lazy plan built on it must not recompute); an
+    external clearCache() only drops blocks, and the next pin re-persists
+    and re-fills; ``unpersist_cached`` releases every pin."""
+    from pyspark import StorageLevel
+
+    from caffeonspark_spark.engine import pin, unpersist_cached
+
+    base = spark.range(100).withColumnRenamed("id", "k")
+    before = set(_cached_rdds(spark))
+    first, fill_jobs = _jobs_in_group(
+        spark, "pin-first",
+        lambda: pin(base.selectExpr("k", "k * 2 AS v"), narrow=False),
+    )
+    again, hit_jobs = _jobs_in_group(
+        spark, "pin-again",
+        lambda: pin(base.selectExpr("k", "k * 2 AS v"), narrow=False),
+    )
+    assert fill_jobs >= 1 and hit_jobs == 0  # one fill for the plan
+    assert len(set(_cached_rdds(spark)) - before) == 1  # one cached RDD
+    assert first.storageLevel != StorageLevel.NONE
+    assert again.storageLevel != StorageLevel.NONE
+    assert sorted(r["v"] for r in again.collect()) == list(range(0, 200, 2))
+
+    other = pin(base.selectExpr("k", "k * 3 AS v"), narrow=False)
+    assert len(set(_cached_rdds(spark)) - before) == 2
+    assert first.storageLevel != StorageLevel.NONE
+
+    spark.catalog.clearCache()
+    assert first.storageLevel == StorageLevel.NONE
+    refreshed, refill_jobs = _jobs_in_group(
+        spark, "pin-refresh",
+        lambda: pin(base.selectExpr("k", "k * 2 AS v"), narrow=False),
+    )
+    assert refill_jobs == fill_jobs  # re-persisted and re-filled
+    assert refreshed.storageLevel != StorageLevel.NONE
+    assert first.storageLevel != StorageLevel.NONE  # same plan, same cache
+
+    unpersist_cached()
+    for df in (first, other, refreshed):
+        assert df.storageLevel == StorageLevel.NONE
+
+
+def test_pin_narrow_view_and_lazy_fill(spark):
+    """(a) a metadata-sized eager pin is read through a COALESCED view over
+    the cached blocks — same rows, fewer partitions, and the pinned plan
+    stays cached; (b) a repeat pin of the same plan reads at the same
+    reduced width without running a job; (c) ``eager=False`` persists
+    without filling or narrowing (the first consumer's action fills the
+    cache); (d) ``unpersist_cached`` releases both."""
+    from pyspark import StorageLevel
+
+    from caffeonspark_spark.engine import pin, unpersist_cached
+
+    base = spark.range(200).repartition(8).withColumnRenamed("id", "k")
+    v1 = pin(base.selectExpr("k", "k + 1 AS v"))
+    width = v1.rdd.getNumPartitions()
+    assert width < 8  # tiny table -> the pin is read at reduced width
+    assert sorted(r["v"] for r in v1.collect()) == list(range(1, 201))
+    assert base.selectExpr("k", "k + 1 AS v").storageLevel != StorageLevel.NONE
+
+    v2, jobs = _jobs_in_group(
+        spark, "pin-narrow-again", lambda: pin(base.selectExpr("k", "k + 1 AS v"))
+    )
+    assert jobs == 0
+    assert v2.rdd.getNumPartitions() == width
+    assert sorted(r["v"] for r in v2.collect()) == list(range(1, 201))
+
+    lazy, jobs = _jobs_in_group(
+        spark, "pin-lazy",
+        lambda: pin(base.selectExpr("k", "k + 2 AS v"), eager=False),
+    )
+    # persisted (marked) but NOT filled or narrowed: the caller's first
+    # action fills the cache, so the build partitioning is preserved
+    assert jobs == 0
+    assert lazy.storageLevel != StorageLevel.NONE
+    assert lazy.rdd.getNumPartitions() == 8
+    assert lazy.count() == 200
+
+    unpersist_cached()
+    assert base.selectExpr("k", "k + 1 AS v").storageLevel == StorageLevel.NONE
+    assert lazy.storageLevel == StorageLevel.NONE
+
+
+def test_pin_narrow_probe_reads_the_coalesced_cache_width(spark, monkeypatch):
+    """The read-width probe sees the width of the MATERIALIZED cache, not
+    the build plan's static shuffle width: AQE coalesces a tiny groupBy's
+    shuffle below ``spark.sql.shuffle.partitions`` while it fills the pin,
+    and the probe reads that coalesced count — the cached RDD's own
+    partition count — so the pin is not re-narrowed on a stale width."""
+    from caffeonspark_spark import engine
+
+    probed = []
+
+    def record(nbytes, cap):
+        probed.append(cap)
+        return cap
+
+    monkeypatch.setattr(engine, "partitions_for_bytes", record)
+    shuffle_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle_width > 1
+    before = set(_cached_rdds(spark))
+    g = spark.range(1000).selectExpr("id % 7 AS m").groupBy("m").count()
+    try:
+        assert engine.pin(g) is g  # no narrower view than the cache itself
+        (cached,) = [i for k, i in _cached_rdds(spark).items() if k not in before]
+        assert cached.numPartitions() < shuffle_width  # AQE coalesced the build
+        assert probed == [cached.numPartitions()]
+        assert sorted(r["m"] for r in g.collect()) == list(range(7))
+    finally:
+        engine.unpersist_cached()
+
+
+def test_pin_release_list_drops_stopped_contexts(spark):
+    """Pins of a stopped context leave the release list on the next pin
+    (their blocks died with the context): a long-lived process cycling
+    short sessions must not accumulate dead handles."""
+    from types import SimpleNamespace
+
+    from caffeonspark_spark import engine
+
+    dead = SimpleNamespace(
+        sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+    )
+    engine._PINNED.append(dead)
+    live = spark.range(10).selectExpr("id * 5 AS v")
+    try:
+        engine.pin(live, eager=False)
+        assert dead not in engine._PINNED
+        assert any(p is live for p in engine._PINNED)
+    finally:
+        engine.unpersist_cached()
+    assert engine._PINNED == []
 
 
 def test_default_driver_memory_rule(monkeypatch, tmp_path):
